@@ -27,6 +27,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .maintenance import (
+    LAYOUTS,
+    begin_append,
+    compact,
+    delete,
+    read_sidecar,
+    rebuild,
+    sidecar_df,
+    store_id_column,
+    write_segment,
+)
 from .text import tokens
 
 
@@ -172,13 +183,6 @@ def _score_and_rank(scored: DataFrame, id_col: str, k: int, k1: float, b: float)
     )
 
 
-# fixed sidecar schemas: probes read them with explicit schemas so no
-# footer-inference job runs per query (the probe-latency term that
-# would otherwise grow with segment count)
-_PARAMS_SCHEMA = "n_docs long, sum_dl long, n_buckets int"
-_TERMSTATS_SCHEMA = "_t string, _df long"
-
-
 def _term_bucket(term: str, n_buckets: int) -> int:
     """crc32(term) % n_buckets — computable identically driver-side
     (zlib.crc32) and engine-side (F.crc32), so a probe can name its
@@ -230,27 +234,10 @@ def write_bm25_index(
     Hadoop FileSystem API, so the same code maintains a local, HDFS,
     or s3a layout (the fsutil rule).
     """
-    from ..fsutil import fs_for, heal_swap_crash, swap_with_staging
-
-    spark = docs.sparkSession
-    heal_swap_crash(spark, path)
-    _, fs, hpath = fs_for(spark, path)
-    if fs.exists(hpath):
-        swap_with_staging(
-            spark, path,
-            lambda staging: _write_bm25_segment(
-                docs, staging, 0, id_col, text_col, n_buckets
-            ),
-            job="compact",
-        )
-    else:
-        _write_bm25_segment(docs, path, 0, id_col, text_col, n_buckets)
-
-
-def _existing_bm25_batches(spark, path: str) -> "list[int]":
-    from ..fsutil import existing_batch_ids
-
-    return existing_batch_ids(spark, path)
+    rebuild(
+        docs.sparkSession, path,
+        lambda target: _write_bm25_segment(docs, target, 0, id_col, text_col, n_buckets),
+    )
 
 
 def _write_bm25_segment(
@@ -261,40 +248,14 @@ def _write_bm25_segment(
     text_col: str,
     n_buckets: int,
 ) -> "dict[str, int]":
-    """One segment's four directory writes, each ``batch=<id>``-scoped
-    with mode=overwrite: re-running the SAME batch id rewrites its own
-    directories (the near_dedup survivor discipline), so a crash
-    mid-append heals by replaying the append — no partial segment can
-    double-count.
-
-    Write ORDER matters for crash recovery (r13 advisory + r15
-    symmetry audit): ``_bm25_params`` lands FIRST (a bootstrap that
-    crashes after the postings write replays down the APPEND path,
-    which reads params for n_buckets — params-last wedged that replay
-    on PATH_NOT_FOUND), then ``_doclens`` — the slice append OVERLAP
-    VALIDATION reads — and only then the postings dir that
-    ``existing_batch_ids`` lists, then ``_termstats``.  Doclens before
-    postings is the ``append_ivf_index`` id_map-first rule: a crash
-    between them leaves the batch UNDISCOVERABLE, so a default-id
-    retry replays the SAME id and overwrites everything; the pre-r15
-    postings-first order let a crash window strand a listed segment
-    invisible to the overlap check — the retry took max+1 and
-    double-counted every id's stats.  A crash AFTER postings leaves
-    the batch discoverable AND validated: a default-id retry raises
-    the (correct) duplicate error, and the healing replay is an
-    explicit same-batch-id append — which is exactly what the
-    streaming ingest sink does on every restart."""
-    import os
-
-    seg = f"batch={batch_id}"
-    spark = docs.sparkSession
+    """Tokenize ``docs`` into one BM25 segment, written in the
+    maintenance write order: the ``_bm25_params`` slice, ``_doclens``
+    (the thin slice appends validate against), the postings, then
+    ``_termstats``.  An all-untokenizable input writes nothing."""
     # ONE tokenize pass (r18 optimization round): tf rows are the
     # segment's ground truth, and the document length is their per-doc
-    # tf sum (size(tokens) ≡ Σ tf — counts, not distincts), so dl no
-    # longer pays a second full tokenize of the corpus.  The
-    # checkpointed tf frame also feeds _termstats directly, replacing
-    # the former re-read of the just-written postings partitions (same
-    # rows by construction — the write is derived from this frame).
+    # tf sum (size(tokens) ≡ Σ tf — counts, not distincts), so dl
+    # never pays a second full tokenize of the corpus
     tf_rows = (
         docs.select(F.col(id_col), F.explode(tokens(text_col)).alias("_t"))
         .groupBy(id_col, "_t")
@@ -314,37 +275,20 @@ def _write_bm25_segment(
     ).first()
     n_docs = int(totals["_n"])
     if n_docs == 0:
-        # nothing tokenizable: write NOTHING rather than a data-less
-        # segment — an empty batch=<id> dir breaks schema inference for
-        # every later probe (caught by the r13 empty-segment check);
-        # replays of the same all-empty batch are likewise no-ops
         return {"batch_id": batch_id, "n_docs": 0}
-    sum_dl = int(totals["_s"])
-    # params as a JVM-literal frame: a 1-row createDataFrame goes
-    # through the pickled-RDD path — a Python-worker job (and the
-    # session's pool FORK, ~5 s, when it is the first such job)
-    (
-        spark.range(1)
-        .select(
-            F.lit(n_docs).cast("long").alias("n_docs"),
-            F.lit(sum_dl).cast("long").alias("sum_dl"),
-            F.lit(n_buckets).cast("int").alias("n_buckets"),
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "_bm25_params", seg))
-    )
-    dl.write.mode("overwrite").parquet(os.path.join(path, "_doclens", seg))
     postings = tf_rows.join(dl, id_col).withColumn(
         "bucket",
         F.pmod(F.crc32(F.col("_t").cast("binary")), F.lit(n_buckets)),
     )
-    postings.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(path, seg)
+    write_segment(
+        path, "bm25", batch_id, postings, id_col,
+        params=(("_bm25_params", sidecar_df(
+            docs.sparkSession, "_bm25_params",
+            [(n_docs, int(totals["_s"]), int(n_buckets))],
+        )),),
+        thin=dl,
+        derived=(("_termstats", tf_rows.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))),),
     )
-    tf_rows.groupBy("_t").agg(F.count(F.lit(1)).alias("_df")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "_termstats", seg))
     return {"batch_id": batch_id, "n_docs": n_docs}
 
 
@@ -378,41 +322,14 @@ def append_bm25_index(
     whole-corpus initial build keeps the lazy path (its crash healing
     is the staged-swap rebuild, never an in-place replay).
     """
-    spark = new_docs.sparkSession
-    import os
-
     new_docs = new_docs.localCheckpoint(eager=True)
-    existing = _existing_bm25_batches(spark, path)
-    if not existing:
-        raise ValueError(
-            f"append_bm25_index: no index at {path} — build one with "
-            "write_bm25_index first"
-        )
-    if batch_id is None:
-        batch_id = existing[-1] + 1
-    params = spark.read.schema(_PARAMS_SCHEMA).parquet(
-        os.path.join(path, "_bm25_params")
+    batch_id, params = begin_append(
+        new_docs, path, "bm25", id_col, text_col, batch_id, "append_bm25_index"
     )
-    n_buckets = params.select("n_buckets").first()[0]
-    other = [b for b in existing if b != batch_id]
-    if other:
-        prior = spark.read.parquet(os.path.join(path, "_doclens")).filter(
-            F.col("batch").isin(other)
-        )
-        dup = (
-            new_docs.select(F.col(id_col))
-            .join(prior, new_docs[id_col] == prior[id_col], "left_semi")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "append_bm25_index: some new doc ids already exist in the "
-                "index — appending them would double-count df/N/avgdl; "
-                "rebuild instead"
-            )
+    if params is None:
+        return {"batch_id": batch_id, "n_docs": 0}
     return _write_bm25_segment(
-        new_docs, path, batch_id, id_col, text_col, n_buckets
+        new_docs, path, batch_id, id_col, text_col, params.n_buckets
     )
 
 
@@ -463,8 +380,7 @@ def bm25_topk_indexed(
         return _empty_bm25_result(dl.select(F.col(id_col)), id_col)
 
     totals = (
-        spark.read.schema(_PARAMS_SCHEMA)
-        .parquet(os.path.join(path, "_bm25_params"))
+        read_sidecar(spark, path, "_bm25_params")
         .agg(
             F.sum("n_docs").alias("n_docs"),
             F.sum("sum_dl").alias("sum_dl"),
@@ -485,9 +401,7 @@ def bm25_topk_indexed(
     terms = list(dict.fromkeys(query_terms))
     buckets = sorted({_term_bucket(t, n_buckets) for t in terms})
     raw = spark.read.parquet(path)
-    id_col = [
-        c for c in raw.columns if c not in ("_t", "_tf", "_dl", "bucket", "batch")
-    ][0]
+    id_col = store_id_column(LAYOUTS["bm25"], raw.columns)
     postings = raw.filter(F.col("bucket").isin(buckets)).filter(
         F.col("_t").isin(terms)
     )
@@ -496,8 +410,7 @@ def bm25_topk_indexed(
             eligible_ids.select(F.col(id_col)), id_col, "left_semi"
         )
     termstats = (
-        spark.read.schema(_TERMSTATS_SCHEMA)
-        .parquet(os.path.join(path, "_termstats"))
+        read_sidecar(spark, path, "_termstats")
         .filter(F.col("_t").isin(terms))
         .groupBy("_t")
         .agg(F.sum("_df").alias("_df"))
@@ -516,196 +429,23 @@ def bm25_topk_indexed(
 def delete_from_bm25_index(
     spark, path: str, doc_ids: "list", id_col: str = "doc_id"
 ) -> "dict[str, int]":
-    """Delete documents from a ``write_bm25_index`` layout — the
-    missing third verb of the index CRUD story (build/append/DELETE/
-    compact), and what makes "update = delete + append" real for the
-    right-to-be-forgotten and re-crawl cases.  Cost is O(touched
-    segments): ``_doclens`` (thin, two columns) names which
-    ``batch=<id>`` segments contain the ids, and ONLY those segments
-    are rewritten minus the deleted docs — per-segment stats (df,
-    n_docs, sum_dl) are recomputed EXACTLY from the survivors, so a
-    probe after deletion is BIT-EQUAL to a fresh rebuild over the
-    surviving corpus (pinned by test; no Lucene-style stale-stats
-    tombstone window).  A segment whose docs are all deleted is
-    removed whole (the empty-segment rule).
-
-    Crash discipline: postings are rewritten FIRST (a crash after that
-    leaves the deleted docs out of results immediately, with stats
-    momentarily stale-high), then termstats/params, and ``_doclens``
-    strictly LAST — ``_doclens`` is the DISCOVERY table this very
-    function uses to find touched segments, so as long as it still
-    lists the deleted ids, a re-run re-finds the batch and re-heals
-    every other directory; rewriting it before the stats (the pre-r15
-    order) left a crash window where termstats/params stayed
-    permanently stale because the re-run no longer saw the segment as
-    touched (r15 advisory).  Every rewrite is idempotent filtering, so
-    a crashed delete heals by RE-RUNNING it — the same survivor
-    discipline as appends.  Each directory rewrite goes through the
-    crash-safe staging swap, so no partial write can lose surviving
-    rows.  Terminal-runs-only, like
-    every swap-based job.  Returns {"segments_rewritten",
+    """Delete documents from a ``write_bm25_index`` layout — what makes
+    "update = delete + append" real for the right-to-be-forgotten and
+    re-crawl cases.  O(touched segments) via ``maintenance.delete``:
+    per-segment stats (df, n_docs, sum_dl) are recomputed EXACTLY from
+    the survivors, so a probe after deletion is BIT-EQUAL to a fresh
+    rebuild over the surviving corpus (pinned by test; no Lucene-style
+    stale-stats tombstone window).  Returns {"segments_rewritten",
     "segments_removed", "docs_deleted"}.  Unknown ids are a no-op."""
-    import os
-
-    from ..fsutil import fs_for, heal_segment_debris, swap_with_staging
-
-    if not doc_ids:
-        return {"segments_rewritten": 0, "segments_removed": 0, "docs_deleted": 0}
-    # a crashed per-segment swap leaves batch=<id>.erase_* debris that
-    # poisons partition discovery — heal all four roots BEFORE any
-    # listing or read (a stranded live segment must be restored before
-    # _existing_bm25_batches counts segments)
-    for sub in ("", "_doclens", "_termstats", "_bm25_params"):
-        heal_segment_debris(spark, os.path.join(path, sub) if sub else path)
-    existing = _existing_bm25_batches(spark, path)
-    if not existing:
-        raise ValueError(f"delete_from_bm25_index: no index at {path}")
-    ids = list(doc_ids)
-    doclens = spark.read.parquet(os.path.join(path, "_doclens"))
-    hit = (
-        doclens.filter(F.col(id_col).isin(ids))
-        .groupBy("batch")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .collect()
-    )
-    touched = sorted(int(r["batch"]) for r in hit)
-    n_deleted = int(sum(r["_n"] for r in hit))
-    if not touched:
-        return {"segments_rewritten": 0, "segments_removed": 0, "docs_deleted": 0}
-    jvm, fs, _ = fs_for(spark, path)
-    rewritten = removed = 0
-    for b in touched:
-        seg = f"batch={b}"
-        seg_path = os.path.join(path, seg)
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(seg_path)):
-            # a previous whole-segment removal crashed between dir
-            # deletes: finish removing the sidecar slices (idempotent;
-            # _doclens LAST — it is the discovery table that got us
-            # here, so it must outlive the stats slices)
-            for d in (os.path.join(path, "_termstats", seg),
-                      os.path.join(path, "_bm25_params", seg),
-                      os.path.join(path, "_doclens", seg)):
-                fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
-            removed += 1
-            continue
-        survivors = spark.read.parquet(seg_path).filter(
-            ~F.col(id_col).isin(ids)
-        )
-        if survivors.limit(1).count() == 0:
-            # whole segment deleted: drop its four directories,
-            # _doclens last (discovery table — see docstring)
-            for d in (seg_path, os.path.join(path, "_termstats", seg),
-                      os.path.join(path, "_bm25_params", seg),
-                      os.path.join(path, "_doclens", seg)):
-                fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
-            removed += 1
-            continue
-
-        def _postings(staging: str) -> None:
-            survivors.write.partitionBy("bucket").parquet(staging)
-
-        swap_with_staging(spark, seg_path, _postings, job="erase")
-        kept = spark.read.parquet(seg_path)
-
-        def _termstats_w(staging: str) -> None:
-            kept.groupBy("_t").agg(F.count(F.lit(1)).alias("_df")).write.parquet(
-                staging
-            )
-
-        swap_with_staging(
-            spark, os.path.join(path, "_termstats", seg), _termstats_w, job="erase"
-        )
-        stats = kept.select(id_col, "_dl").distinct().agg(
-            F.count(F.lit(1)).alias("n"), F.sum("_dl").alias("s")
-        ).first()
-        n_buckets = (
-            spark.read.schema(_PARAMS_SCHEMA)
-            .parquet(os.path.join(path, "_bm25_params", seg))
-            .first()["n_buckets"]
-        )
-
-        def _params_w(staging: str) -> None:
-            # JVM-literal frame (r18): the pickled-RDD createDataFrame
-            # here measured 7.4 s of the 9.5 s single-segment delete —
-            # the Python-worker pool fork landing on a 1-row frame
-            (
-                spark.range(1)
-                .select(
-                    F.lit(int(stats["n"])).cast("long").alias("n_docs"),
-                    F.lit(int(stats["s"])).cast("long").alias("sum_dl"),
-                    F.lit(int(n_buckets)).cast("int").alias("n_buckets"),
-                )
-                .coalesce(1)
-                .write.parquet(staging)
-            )
-
-        swap_with_staging(
-            spark, os.path.join(path, "_bm25_params", seg), _params_w, job="erase"
-        )
-
-        def _doclens_w(staging: str) -> None:
-            kept.select(id_col, "_dl").distinct().write.parquet(staging)
-
-        # _doclens LAST: every earlier crash point leaves the deleted
-        # ids listed here, so a re-run still discovers this segment as
-        # touched and re-heals the stats (r15 advisory)
-        swap_with_staging(
-            spark, os.path.join(path, "_doclens", seg), _doclens_w, job="erase"
-        )
-        rewritten += 1
-    return {
-        "segments_rewritten": rewritten,
-        "segments_removed": removed,
-        "docs_deleted": n_deleted,
-    }
+    return delete(spark, path, "bm25", doc_ids, id_col)
 
 
 def compact_bm25_index(spark, path: str) -> None:
-    """Collapse a segmented BM25 index to ONE segment (``batch=0``) —
-    the maintenance job that bounds probe listing cost after many
-    appends, exactly as ``sketch_ingest.compact_sketch_store`` bounds
-    the sketch store.  Every statistic merges losslessly (postings are
-    disjoint rows; df/n_docs/sum_dl are integer sums), so probes are
-    bit-identical before and after — pinned by test.  The whole index
-    root goes through one crash-safe ``fsutil.swap_with_staging``;
-    like every swap-based job, run it only while no ingest stream is
-    writing the index."""
-    import os
-
-    from ..fsutil import swap_with_staging
-
-    def _write(staging: str) -> None:
-        raw = spark.read.parquet(path)
-        id_col = [
-            c for c in raw.columns if c not in ("_t", "_tf", "_dl", "bucket", "batch")
-        ][0]
-        seg = "batch=0"
-        raw.select(id_col, "_t", "_tf", "_dl", "bucket").write.partitionBy(
-            "bucket"
-        ).parquet(os.path.join(staging, seg))
-        (
-            spark.read.schema(_TERMSTATS_SCHEMA)
-            .parquet(os.path.join(path, "_termstats"))
-            .groupBy("_t")
-            .agg(F.sum("_df").alias("_df"))
-            .write.parquet(os.path.join(staging, "_termstats", seg))
-        )
-        spark.read.parquet(os.path.join(path, "_doclens")).drop("batch").write.parquet(
-            os.path.join(staging, "_doclens", seg)
-        )
-        (
-            spark.read.schema(_PARAMS_SCHEMA)
-            .parquet(os.path.join(path, "_bm25_params"))
-            .agg(
-                F.sum("n_docs").alias("n_docs"),
-                F.sum("sum_dl").alias("sum_dl"),
-                F.max("n_buckets").alias("n_buckets"),
-            )
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_bm25_params", seg))
-        )
-
-    swap_with_staging(spark, path, _write, job="compact")
+    """Collapse a segmented BM25 index to ONE segment (``batch=0``) via
+    ``maintenance.compact``: postings move unchanged and ``_doclens``,
+    ``_termstats`` and ``_bm25_params`` are recomputed from them, so
+    probes are bit-identical to a rebuild over the indexed docs."""
+    compact(spark, path, "bm25")
 
 
 def rrf_fuse(

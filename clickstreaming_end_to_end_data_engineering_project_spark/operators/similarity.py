@@ -25,6 +25,18 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..sources.formats import local_rows_df
+from .maintenance import (
+    begin_append,
+    check_overlap,
+    compact,
+    delete,
+    existing_segments,
+    read_sidecar,
+    rebuild,
+    run_pooled,
+    sidecar_df,
+    write_segment,
+)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -167,15 +179,9 @@ def ivf_topk_indexed_batch(
 
     cent_rows = sorted(
         (int(r["cluster"]), [float(x) for x in r["centroid"]])
-        for r in spark.read.schema("cluster int, centroid array<double>")
-        .parquet(os.path.join(path, "_ivf_centroids"))
-        .collect()
+        for r in read_sidecar(spark, path, "_ivf_centroids").collect()
     )
-    params = (
-        spark.read.schema("n_clusters int, dims int")
-        .parquet(os.path.join(path, "_ivf_params"))
-        .head()
-    )
+    params = read_sidecar(spark, path, "_ivf_params").head()
     import math
 
     pairs = []
@@ -403,76 +409,43 @@ def write_lsh_index(
     staging swap (r15, the write_pq_index discipline extended to the
     whole write_* family): the old index stays probe-able until the
     new build fully lands."""
-    from ..fsutil import fs_for, heal_swap_crash, swap_with_staging
-
     spark = df.sparkSession
-    heal_swap_crash(spark, path)
-    _, fs, hpath = fs_for(spark, path)
-    if fs.exists(hpath) and not df.isEmpty():
-        swap_with_staging(
-            spark, path,
-            lambda staging: _write_lsh_segment(
-                df, staging, 0, planes, dims, id_col, vec_col, write_params=True
-            ),
-            job="compact",
-        )
-        return
-    if fs.exists(hpath):
-        # empty-input rebuild: pre-r15 semantics (clear, then the
-        # segment writer's empty guard leaves no index)
+    if df.isEmpty():
+        # empty input leaves no index (never a data-less segment dir)
+        from ..fsutil import fs_for
+
+        _, fs, hpath = fs_for(spark, path)
         fs.delete(hpath, True)
-    _write_lsh_segment(df, path, 0, planes, dims, id_col, vec_col, write_params=True)
+        return
+    rebuild(
+        spark, path,
+        lambda target: _write_lsh_segment(
+            df, target, 0, id_col, vec_col, planes, dims, write_params=True
+        ),
+    )
 
 
 def _write_lsh_segment(
     vecs: DataFrame,
     path: str,
     batch_id: int,
-    planes: int,
-    dims: int,
     id_col: str,
     vec_col: str,
+    planes: int,
+    dims: int,
     write_params: bool = False,
 ) -> None:
-    """One LSH segment's two directory writes (vectors by bucket + the
-    id-map slice), each ``batch=<id>``-scoped with mode=overwrite so a
-    replayed id rewrites its own segment.  ``write_params`` also lays
-    down the ``_lsh_params`` sidecar (initial build / stream
-    bootstrap)."""
-    import os
-
-    seg = f"batch={batch_id}"
-    if vecs.isEmpty():
-        # never write a data-less segment dir — it breaks schema
-        # inference for every later probe (the r13 empty-segment rule)
-        return
-    if write_params:
-        # params FIRST: a bootstrap that crashes mid-segment then
-        # replays takes the append path (segments exist ⇒ params must
-        # be readable) and overwrites its own segment — fully healed
-        (
-            local_rows_df(
-                vecs.sparkSession, [(int(planes), int(dims))], "planes int, dims int"
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "_lsh_params"))
-        )
+    """Bucket ``vecs`` into one LSH segment (``maintenance.write_segment``
+    order: ``_id_map`` slice, then the vectors by bucket).
+    ``write_params`` also lays down the ``_lsh_params`` sidecar first
+    (initial build / stream bootstrap)."""
+    params = (
+        (("_lsh_params", sidecar_df(vecs.sparkSession, "_lsh_params", [(int(planes), int(dims))])),)
+        if write_params
+        else ()
+    )
     bucketed = vecs.withColumn("lsh_bucket", lsh_bucket(F.col(vec_col), planes, dims))
-    # _id_map slice FIRST (r15, the append_ivf_index advisory applied
-    # to its LSH twin): batch ids are listed from the VECTORS root and
-    # append overlap is validated against _id_map, so a crash between
-    # the two writes must leave the DISCOVERABLE side (vectors) absent
-    # — the retry then replays the same batch id and overwrites both.
-    # The old vectors-first order let a crashed append strand a
-    # vectors segment invisible to the overlap check: the retry took
-    # batch max+1 and inserted every id twice.
-    bucketed.select(id_col, "lsh_bucket").write.mode("overwrite").parquet(
-        os.path.join(path, "_id_map", seg)
-    )
-    bucketed.write.mode("overwrite").partitionBy("lsh_bucket").parquet(
-        os.path.join(path, seg)
-    )
+    write_segment(path, "lsh", batch_id, bucketed, id_col, params=params)
 
 
 def append_lsh_index(
@@ -502,44 +475,14 @@ def append_lsh_index(
     sidecars would otherwise lose its files mid-append.  Increments
     are increment-sized, so the checkpoint is bounded.
     """
-    import os
-
-    from ..fsutil import existing_batch_ids
-
-    spark = new_vecs.sparkSession
     new_vecs = new_vecs.localCheckpoint(eager=True)
-    existing = existing_batch_ids(spark, path)
-    if not existing:
-        raise ValueError(
-            f"append_lsh_index: no index at {path} — build one with "
-            "write_lsh_index first"
-        )
-    if batch_id is None:
-        batch_id = existing[-1] + 1
-    params = (
-        spark.read.schema("planes int, dims int")
-        .parquet(os.path.join(path, "_lsh_params"))
-        .head()
+    batch_id, params = begin_append(
+        new_vecs, path, "lsh", id_col, vec_col, batch_id, "append_lsh_index"
     )
-    other = [b for b in existing if b != batch_id]
-    if other:
-        prior = spark.read.parquet(os.path.join(path, "_id_map")).filter(
-            F.col("batch").isin(other)
-        )
-        dup = (
-            new_vecs.select(F.col(id_col))
-            .join(prior, new_vecs[id_col] == prior[id_col], "left_semi")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "append_lsh_index: some new vector ids already exist in the "
-                "index — duplicate rows would surface in probe results; "
-                "rebuild instead"
-            )
+    if params is None:
+        return {"batch_id": batch_id, "n_vectors": 0}
     _write_lsh_segment(
-        new_vecs, path, batch_id, params.planes, params.dims, id_col, vec_col
+        new_vecs, path, batch_id, id_col, vec_col, params.planes, params.dims
     )
     return {"batch_id": batch_id, "n_vectors": new_vecs.count()}
 
@@ -597,11 +540,7 @@ def lsh_topk_indexed(
     the matching rows (brute-force-filtered parity)."""
     import os
 
-    params = (
-        spark.read.schema("planes int, dims int")
-        .parquet(os.path.join(path, "_lsh_params"))
-        .head()
-    )
+    params = read_sidecar(spark, path, "_lsh_params").head()
     planes, dims = int(params.planes), int(params.dims)
     idx = spark.read.parquet(path)
     if query_vec is not None:
@@ -838,307 +777,85 @@ def write_ivf_index(
     staging swap (r15, the write_pq_index discipline extended to the
     whole write_* family): a failure anywhere in training or the build
     writes leaves the old index live and probe-able."""
-    import os
-
-    from ..fsutil import fs_for, heal_swap_crash, swap_with_staging
     from .kmeans import kmeans_assign
 
     spark = df.sparkSession
-    heal_swap_crash(spark, path)
-    _, fs, hpath = fs_for(spark, path)
     clusters = kmeans_assign(
         df, k=n_clusters, iterations=iterations, id_col=id_col, vec_col=vec_col
     )
     if "cluster" in df.columns:
         df = df.drop("cluster")
     clustered = df.join(clusters, id_col).localCheckpoint(eager=True)
-    cents = build_ivf_centroids(clustered, "cluster", vec_col)
-    dims = len(df.select(vec_col).first()[0])
-
-    def _build(root: str) -> None:
-        clustered.write.partitionBy("cluster").parquet(
-            os.path.join(root, "vectors", "batch=0")
-        )
-        clustered.select(id_col, "cluster").write.parquet(
-            os.path.join(root, "_id_map", "batch=0")
-        )
-        (
-            cents.select(
-                F.col("cluster").cast("int"),
-                F.col("centroid").cast("array<double>"),
-            )
-            .coalesce(1)
-            .write.parquet(os.path.join(root, "_ivf_centroids"))
-        )
-        (
-            local_rows_df(
-                spark, [(int(n_clusters), int(dims))], "n_clusters int, dims int"
-            )
-            .coalesce(1)
-            .write.parquet(os.path.join(root, "_ivf_params"))
-        )
-
-    if fs.exists(hpath):
-        swap_with_staging(spark, path, _build, job="compact")
-    else:
-        _build(path)
-
-
-def _delete_ids_from_segments(
-    spark,
-    store_root: str,
-    id_col: str,
-    ids: "list",
-    partition_col: "str | None",
-    id_map_root: "str | None" = None,
-) -> "dict[str, int]":
-    """Shared delete engine for the segmented vector layouts (the
-    ``delete_from_bm25_index`` discipline without corpus stats, since
-    vector layouts carry none): discover the TOUCHED ``batch=<id>``
-    segments through the thin table (the ``_id_map`` sidecar where one
-    exists, else the store itself — columnar-pruned to the id column),
-    rewrite only those segments minus the deleted ids through the
-    crash-safe staging swap, and drop a segment whole when every id in
-    it is deleted (the empty-segment rule).  Idempotent: a crashed
-    delete heals by re-running it (filtering again is a no-op, and a
-    segment dir lost mid-removal has its sidecar slice finished off on
-    replay).  Trained sidecars (centroids, codebooks, params) are
-    untouched — deletion never retrains, exactly as appends never
-    retrain (Faiss/Lucene semantics)."""
-    import os
-
-    from ..fsutil import fs_for, swap_with_staging
-
-    if not ids:
-        return {"segments_rewritten": 0, "segments_removed": 0, "vectors_deleted": 0}
-    from ..fsutil import heal_segment_debris
-
-    jvm, fs, store_hpath = fs_for(spark, store_root)
-    if not fs.exists(store_hpath):
-        raise ValueError(f"delete: no index store at {store_root}")
-    # a crashed per-segment swap leaves batch=<id>.erase_* debris that
-    # poisons partition discovery — heal BEFORE the discovery read
-    heal_segment_debris(spark, store_root)
-    thin_root = store_root
-    if id_map_root is not None:
-        heal_segment_debris(spark, id_map_root)
-        _, _, im_hpath = fs_for(spark, id_map_root)
-        if fs.exists(im_hpath):
-            thin_root = id_map_root
-    hit = (
-        spark.read.parquet(thin_root)
-        .filter(F.col(id_col).isin(ids))
-        .groupBy("batch")
-        .agg(F.countDistinct(id_col).alias("_n"))
-        .collect()
+    cents = build_ivf_centroids(clustered, "cluster", vec_col).select(
+        F.col("cluster").cast("int"), F.col("centroid").cast("array<double>")
     )
-    touched = sorted(int(r["batch"]) for r in hit)
-    n_deleted = int(sum(r["_n"] for r in hit))
-    rewritten = removed = 0
-
-    def _hp(p: str):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    for b in touched:
-        seg = f"batch={b}"
-        seg_path = os.path.join(store_root, seg)
-        im_seg = os.path.join(id_map_root, seg) if id_map_root else None
-        if not fs.exists(_hp(seg_path)):
-            # previous whole-segment removal crashed between deletes:
-            # finish the sidecar slice (idempotent replay)
-            if im_seg:
-                fs.delete(_hp(im_seg), True)
-            removed += 1
-            continue
-        survivors = spark.read.parquet(seg_path).filter(~F.col(id_col).isin(ids))
-        if survivors.limit(1).count() == 0:
-            fs.delete(_hp(seg_path), True)
-            if im_seg:
-                fs.delete(_hp(im_seg), True)
-            removed += 1
-            continue
-
-        def _store_w(staging: str) -> None:
-            w = survivors.write
-            if partition_col:
-                w = w.partitionBy(partition_col)
-            w.parquet(staging)
-
-        swap_with_staging(spark, seg_path, _store_w, job="erase")
-        if im_seg and fs.exists(_hp(im_seg)):
-            im_kept = spark.read.parquet(im_seg).filter(~F.col(id_col).isin(ids))
-
-            def _im_w(staging: str) -> None:
-                im_kept.write.parquet(staging)
-
-            swap_with_staging(spark, im_seg, _im_w, job="erase")
-        rewritten += 1
-    return {
-        "segments_rewritten": rewritten,
-        "segments_removed": removed,
-        "vectors_deleted": n_deleted,
-    }
+    dims = len(df.select(vec_col).first()[0])
+    params = sidecar_df(spark, "_ivf_params", [(int(n_clusters), int(dims))])
+    rebuild(
+        spark, path,
+        lambda target: write_segment(
+            target, "ivf", 0, clustered, id_col,
+            params=(("_ivf_centroids", cents), ("_ivf_params", params)),
+        ),
+    )
 
 
 def delete_from_lsh_index(
     spark, path: str, vec_ids: "list", id_col: str = "vec_id"
 ) -> "dict[str, int]":
-    """Delete vectors from a ``write_lsh_index`` layout — O(touched
-    segments), discovery through the ``_id_map`` sidecar; a probe
-    after deletion is IDENTICAL to a fresh rebuild over the survivors
-    (hyperplanes are content-deterministic; pinned by test)."""
-    import os
-
-    return _delete_ids_from_segments(
-        spark, path, id_col, vec_ids, "lsh_bucket",
-        id_map_root=os.path.join(path, "_id_map"),
-    )
+    """Delete vectors from a ``write_lsh_index`` layout
+    (``maintenance.delete``) — O(touched segments), discovery through
+    the ``_id_map`` sidecar; a probe after deletion is IDENTICAL to a
+    fresh rebuild over the survivors (hyperplanes are
+    content-deterministic; pinned by test)."""
+    return delete(spark, path, "lsh", vec_ids, id_col)
 
 
 def delete_from_ivf_index(
     spark, path: str, vec_ids: "list", id_col: str = "vec_id"
 ) -> "dict[str, int]":
-    """Delete vectors from a ``write_ivf_index`` layout — O(touched
-    segments).  Centroids are NOT retrained (trained state; the
-    append rule in reverse), so an exhaustive probe after deletion
-    equals brute force over the survivors (pinned), while serving-
-    nprobe recall drifts only as far as the surviving distribution
-    drifts from the training sample — retrain = rebuild."""
-    import os
-
-    return _delete_ids_from_segments(
-        spark, os.path.join(path, "vectors"), id_col, vec_ids, "cluster",
-        id_map_root=os.path.join(path, "_id_map"),
-    )
+    """Delete vectors from a ``write_ivf_index`` layout
+    (``maintenance.delete``).  Centroids are NOT retrained (the append
+    rule in reverse), so an exhaustive probe after deletion equals
+    brute force over the survivors (pinned), while serving-nprobe
+    recall drifts only as far as the surviving distribution drifts
+    from the training sample — retrain = rebuild."""
+    return delete(spark, path, "ivf", vec_ids, id_col)
 
 
 def delete_from_pq_index(
     spark, path: str, vec_ids: "list", id_col: str = "vec_id"
 ) -> "dict[str, int]":
-    """Delete vectors from a ``write_pq_index`` layout — O(touched
-    segments) over the codes table (the codes ARE the thin table).
-    Codebooks untouched; probe after deletion equals a same-codebook
-    rebuild over the survivors (pinned)."""
-    import os
-
-    return _delete_ids_from_segments(
-        spark, os.path.join(path, "codes"), id_col, vec_ids, None
-    )
+    """Delete vectors from a ``write_pq_index`` layout
+    (``maintenance.delete`` over the codes table, which is its own
+    thin table).  Codebooks untouched; probe after deletion equals a
+    same-codebook rebuild over the survivors (pinned)."""
+    return delete(spark, path, "pq", vec_ids, id_col)
 
 
 def delete_from_ivfpq_index(
     spark, path: str, vec_ids: "list", id_col: str = "vec_id"
 ) -> "dict[str, int]":
-    """Delete vectors from a ``write_ivfpq_index`` layout — O(touched
-    segments) over the residual-codes table (multiple assignment means
-    assign_n rows per id, all removed together).  Coarse centroids and
+    """Delete vectors from a ``write_ivfpq_index`` layout
+    (``maintenance.delete``; multiple assignment means assign_n code
+    rows per id, all removed together).  Coarse centroids and
     codebooks untouched; exhaustive probe after deletion equals brute
     force over the survivors (pinned)."""
-    import os
-
-    return _delete_ids_from_segments(
-        spark, os.path.join(path, "codes"), id_col, vec_ids, "cluster"
-    )
+    return delete(spark, path, "ivfpq", vec_ids, id_col)
 
 
 def compact_lsh_index(spark, path: str) -> None:
-    """Collapse a segmented LSH index to ONE segment (``batch=0``) —
-    bounds the probe's directory-listing cost after many appends
-    (the ``compact_bm25_index`` pattern; one crash-safe root swap).
-    Pure row movement: bucket contents and the id map are unioned
-    unchanged, so probes are identical before and after (pinned by
-    test).  Terminal-runs-only, like every swap-based job."""
-    import os
-
-    from ..fsutil import swap_with_staging
-
-    def _write(staging: str) -> None:
-        (
-            spark.read.parquet(path)
-            .drop("batch")
-            .write.partitionBy("lsh_bucket")
-            .parquet(os.path.join(staging, "batch=0"))
-        )
-        # _id_map REBUILT from the store, not copied (r15, the
-        # compact_ivf_index rule): the id_map-FIRST append ordering
-        # means a crashed append can orphan a slice whose vectors
-        # never landed — copying would fold phantom ids into batch=0
-        # and wedge later appends of those ids on the overlap check
-        idc = [
-            c
-            for c in spark.read.parquet(os.path.join(path, "_id_map")).columns
-            if c not in ("lsh_bucket", "batch")
-        ][0]
-        (
-            spark.read.parquet(path)
-            .select(idc, "lsh_bucket")
-            .write.parquet(os.path.join(staging, "_id_map", "batch=0"))
-        )
-        (
-            spark.read.schema("planes int, dims int")
-            .parquet(os.path.join(path, "_lsh_params"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_lsh_params"))
-        )
-
-    swap_with_staging(spark, path, _write, job="compact")
+    """Collapse a segmented LSH index to ONE segment (``batch=0``) via
+    ``maintenance.compact`` — pure row movement, so probes are
+    identical before and after (pinned by test)."""
+    compact(spark, path, "lsh")
 
 
 def compact_ivf_index(spark, path: str) -> None:
-    """Collapse a segmented IVF vector store to ONE segment — the
-    ``compact_lsh_index`` twin for the cluster-partitioned layout.
-    Sidecars (centroids/params) are copied unchanged: compaction moves
-    rows, never retrains."""
-    import os
-
-    from ..fsutil import swap_with_staging
-
-    def _write(staging: str) -> None:
-        from ..fsutil import fs_for
-
-        (
-            spark.read.parquet(os.path.join(path, "vectors"))
-            .drop("batch")
-            .write.partitionBy("cluster")
-            .parquet(os.path.join(staging, "vectors", "batch=0"))
-        )
-        # the _id_map overlap-validation sidecar is REBUILT from the
-        # vector store rather than copied (r15): with the append's
-        # id_map-FIRST write order, a crash between the two writes can
-        # orphan an _id_map slice whose vectors never landed — copying
-        # would fold those phantom ids into batch=0 and later appends
-        # of the same ids would fail the overlap check forever.
-        # Deriving from the store makes compaction the heal point; the
-        # extra scan is column-pruned to (id, cluster).  A pre-r14
-        # layout without an id map stays without — appends there fall
-        # back to the vector-store id scan.
-        id_map_root = os.path.join(path, "_id_map")
-        _, fs, id_map_hpath = fs_for(spark, id_map_root)
-        if fs.exists(id_map_hpath):
-            idc = [
-                c
-                for c in spark.read.parquet(id_map_root).columns
-                if c not in ("cluster", "batch")
-            ][0]
-            (
-                spark.read.parquet(os.path.join(path, "vectors"))
-                .select(idc, "cluster")
-                .write.parquet(os.path.join(staging, "_id_map", "batch=0"))
-            )
-        (
-            spark.read.schema("cluster int, centroid array<double>")
-            .parquet(os.path.join(path, "_ivf_centroids"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_ivf_centroids"))
-        )
-        (
-            spark.read.schema("n_clusters int, dims int")
-            .parquet(os.path.join(path, "_ivf_params"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_ivf_params"))
-        )
-
-    swap_with_staging(spark, path, _write, job="compact")
+    """Collapse a segmented IVF vector store to ONE segment via
+    ``maintenance.compact``; centroids and params are copied
+    unchanged — compaction moves rows, never retrains."""
+    compact(spark, path, "ivf")
 
 
 def append_ivf_index(
@@ -1169,102 +886,12 @@ def append_ivf_index(
     = rebuild).  ``batch_id`` semantics are ``append_lsh_index``'s:
     default max+1, explicit id overwrites its own segment (replayable).
     New ids must not exist in other segments — checked against the
-    thin ``_id_map`` sidecar (two columns, increment-sized join; never
-    the vector store — r13 verdict #3 removed the last append term
-    that grew with corpus file count), falling back to a
-    columnar-pruned id scan of the vector store for pre-r14 layouts
-    without the sidecar; raises on overlap."""
-    import os
-
-    from ..fsutil import existing_batch_ids
-
-    spark = new_vecs.sparkSession
-    vec_root = os.path.join(path, "vectors")
-    existing = existing_batch_ids(spark, vec_root)
-    if not existing:
-        raise ValueError(
-            f"append_ivf_index: no index at {path} — build one with "
-            "write_ivf_index first"
-        )
-    if batch_id is None:
-        batch_id = existing[-1] + 1
-    # one action answers both "is the increment empty?" and "what are
-    # its dims?" (was isEmpty + first — two scans of the increment)
-    head = new_vecs.select(vec_col).head(1)
-    if not head:
-        # the empty-segment rule: write nothing, report nothing added
-        return {"batch_id": batch_id, "n_vectors": 0}
-    params = (
-        spark.read.schema("n_clusters int, dims int")
-        .parquet(os.path.join(path, "_ivf_params"))
-        .head()
-    )
-    dims = len(head[0][0])
-    if dims != params.dims:
-        raise ValueError(
-            f"append_ivf_index: vectors have {dims} dims, index expects "
-            f"{params.dims}"
-        )
-    other = [b for b in existing if b != batch_id]
-    if other:
-        from ..fsutil import fs_for
-
-        id_map_root = os.path.join(path, "_id_map")
-        _, fs, id_map_hpath = fs_for(spark, id_map_root)
-        if fs.exists(id_map_hpath):
-            # the thin sidecar: (id, cluster) only — overlap validation
-            # cost is bounded by the id map's file count, not the
-            # vector store's (r13 verdict #3)
-            prior = spark.read.parquet(id_map_root).filter(
-                F.col("batch").isin(other)
-            ).select(F.col(id_col))
-        else:
-            # pre-r14 layout without the sidecar: columnar-pruned id
-            # scan of the vector store (the old path)
-            prior = spark.read.parquet(vec_root).filter(
-                F.col("batch").isin(other)
-            ).select(F.col(id_col))
-        dup = (
-            new_vecs.select(F.col(id_col))
-            .join(prior, new_vecs[id_col] == prior[id_col], "left_semi")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "append_ivf_index: some new vector ids already exist in the "
-                "index — duplicate rows would surface in probe results; "
-                "rebuild instead"
-            )
-    cents = spark.read.schema("cluster int, centroid array<double>").parquet(
-        os.path.join(path, "_ivf_centroids")
-    )
-    if "cluster" in new_vecs.columns:
-        new_vecs = new_vecs.drop("cluster")
-    from .kmeans import _sq_dist
-
-    w = Window.partitionBy(id_col).orderBy(F.col("_d").asc(), F.col("cluster"))
-    assigned = (
-        new_vecs.crossJoin(F.broadcast(cents))
-        .withColumn("_d", _sq_dist(F.col(vec_col), F.col("centroid")))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_d", "_rn", "centroid")
-    )
-    assigned = assigned.localCheckpoint(eager=True)
-    # _id_map slice FIRST (r15 advisory): batch ids are listed from the
-    # VECTORS root, so a crash between the two writes replays the same
-    # default batch_id and mode("overwrite") replaces both directories;
-    # the reverse order left a window where ids lived in the store but
-    # not in _id_map, and a retried append (max+1 from the vectors
-    # listing) passed the id_map overlap check and duplicated them.
-    assigned.select(id_col, "cluster").write.mode("overwrite").parquet(
-        os.path.join(path, "_id_map", f"batch={batch_id}")
-    )
-    assigned.write.mode("overwrite").partitionBy("cluster").parquet(
-        os.path.join(vec_root, f"batch={batch_id}")
-    )
-    return {"batch_id": batch_id, "n_vectors": assigned.count()}
+    thin ``_id_map`` sidecar (falling back to a columnar-pruned id scan
+    of the vector store for pre-r14 layouts without it); raises on
+    overlap.  The one-increment case of ``append_ivf_index_many``."""
+    return _append_ivf(
+        [new_vecs], path, id_col, vec_col, batch_id, "append_ivf_index"
+    )[0]
 
 
 def append_ivf_index_many(
@@ -1277,60 +904,44 @@ def append_ivf_index_many(
     pass — the multi-batch form of ``append_ivf_index`` (r19
     optimization round; the r18 profile of the 8-append maintenance
     cycle found no dominator, just eight repetitions of the same five
-    fixed-cost actions: head, params read, overlap check, assign +
-    checkpoint, count).  Semantically equivalent to calling
+    fixed-cost actions).  Semantically equivalent to calling
     ``append_ivf_index`` on each frame in order with default batch ids
     (consecutive ``max+1`` ids; empty increments consume no id and
     write no segment) and PINNED so by test: same segment directories,
-    same rows, same ``_id_map`` slices, same assignment rule (nearest
-    stored centroid by squared euclidean, ties to the lower cluster
-    id).  The amortization (guide §1.2 / §2.6):
+    same rows, same ``_id_map`` slices, same assignment rule.
 
-    - ONE assignment job over the tagged union of all increments
-      (localCheckpointed), ONE per-batch count aggregate, ONE dims
-      validation, ONE id-overlap check (which also catches ids
-      duplicated ACROSS increments — exactly what the sequential form
-      detects when a later append meets an earlier one's ``_id_map``
-      slice) — instead of five actions per increment;
-    - the per-segment writes overlap through a small driver thread
-      pool in two pooled PHASES: every ``_id_map`` slice first, then a
-      barrier, then every vector segment — preserving the r15
-      map-before-store ordering globally, not just per batch (ids can
-      appear in ``_id_map`` without vectors after a crash — the safe
-      direction, healed by the same-id overwrite — never the reverse).
-
-    All increments must share one schema (the union is positional
-    after the ``cluster`` drop); validation failures raise BEFORE any
-    write, so a rejected call leaves the index untouched (the
-    sequential form can stop mid-way with earlier days landed).  Crash
-    mid-write + re-run raises on the id-overlap check exactly as
+    ONE assignment job over the tagged union of all increments, ONE
+    per-increment count + dims aggregate, ONE id-overlap check (which
+    also catches ids duplicated ACROSS increments) — instead of five
+    actions per increment; the segment writes then overlap through a
+    small driver thread pool, each in the ``maintenance.write_segment``
+    order.  All increments must share one schema (the union is
+    positional after the ``cluster`` drop); validation failures raise
+    BEFORE any write, so a rejected call leaves the index untouched.
+    Crash mid-write + re-run raises on the id-overlap check exactly as
     re-running a sequential multi-day append script does — keep the
     increment set and rebuild or heal before retrying."""
-    import os
-    from concurrent.futures import ThreadPoolExecutor
+    return _append_ivf(new_batches, path, id_col, vec_col, None, "append_ivf_index_many")
 
-    from ..fsutil import existing_batch_ids, fs_for
+
+def _append_ivf(
+    new_batches: "list[DataFrame]",
+    path: str,
+    id_col: str,
+    vec_col: str,
+    batch_id: "int | None",
+    verb: str,
+) -> "list[dict[str, int]]":
+    """The shared body of ``append_ivf_index`` (one increment, optional
+    explicit ``batch_id``) and ``append_ivf_index_many``."""
+    from .kmeans import _sq_dist
 
     if not new_batches:
         return []
     spark = new_batches[0].sparkSession
-    vec_root = os.path.join(path, "vectors")
-    existing = existing_batch_ids(spark, vec_root)
-    if not existing:
-        raise ValueError(
-            f"append_ivf_index_many: no index at {path} — build one with "
-            "write_ivf_index first"
-        )
-    params = (
-        spark.read.schema("n_clusters int, dims int")
-        .parquet(os.path.join(path, "_ivf_params"))
-        .head()
-    )
-    cents = spark.read.schema("cluster int, centroid array<double>").parquet(
-        os.path.join(path, "_ivf_centroids")
-    )
-    from .kmeans import _sq_dist
-
+    existing = existing_segments(spark, path, "ivf", verb)
+    dims = read_sidecar(spark, path, "_ivf_params").head().dims
+    cents = read_sidecar(spark, path, "_ivf_centroids")
     tagged = None
     for i, nb in enumerate(new_batches):
         if "cluster" in nb.columns:
@@ -1347,7 +958,7 @@ def append_ivf_index_many(
         .filter(F.col("_rn") == 1)
         .drop("_d", "_rn", "centroid")
     ).localCheckpoint(eager=True)
-    # one aggregate answers per-batch emptiness AND dims validation
+    # one aggregate answers per-increment emptiness AND dims validation
     meta = {
         r["_ab"]: (r["_n"], r["_dmin"], r["_dmax"])
         for r in assigned.groupBy("_ab")
@@ -1358,86 +969,39 @@ def append_ivf_index_many(
         )
         .collect()
     }
-    for i in range(len(new_batches)):
-        n, dmin, dmax = meta.get(i, (0, None, None))
-        if n and (dmin != params.dims or dmax != params.dims):
+    counts = [meta.get(i, (0,))[0] for i in range(len(new_batches))]
+    for i, n in enumerate(counts):
+        if n and meta[i][1:] != (dims, dims):
             raise ValueError(
-                f"append_ivf_index_many: increment {i} has vectors of "
-                f"{dmin}..{dmax} dims, index expects {params.dims}"
+                f"{verb}: increment {i} has vectors of {meta[i][1]}..{meta[i][2]} "
+                f"dims, index expects {dims}"
             )
     # default consecutive ids; empty increments consume no id (the
     # sequential form's max+1 rule reproduced exactly)
-    next_id = existing[-1] + 1
-    batch_ids: "list[int]" = []
-    for i in range(len(new_batches)):
-        batch_ids.append(next_id)
-        if meta.get(i, (0,))[0]:
-            next_id += 1
-    # ONE overlap check: new ids vs every PRIOR segment's _id_map (the
-    # sidecar; sequential parity for the pre-r14 no-sidecar layout is
-    # not needed here — this verb targets the sidecar-era layout, and
-    # falls back to the store scan the same way) plus ids duplicated
-    # across increments
-    newids = assigned.select(F.col(id_col), "_ab").distinct()
-    cross_dup = (
-        newids.groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .filter(F.col("_c") > 1)
-        .limit(1)
-        .count()
-    )
-    if cross_dup:
+    batch_ids, next_id = [], existing[-1] + 1
+    for n in counts:
+        batch_ids.append(next_id if batch_id is None else batch_id)
+        next_id += bool(n)
+    newids = assigned.select(F.col(id_col), "_ab")
+    if len(new_batches) > 1 and not (
+        newids.distinct().groupBy(id_col).agg(F.count(F.lit(1)).alias("_c"))
+        .filter(F.col("_c") > 1).isEmpty()
+    ):
         raise ValueError(
-            "append_ivf_index_many: an id appears in more than one "
-            "increment — duplicate rows would surface in probe results"
+            f"{verb}: an id appears in more than one increment — duplicate "
+            "rows would surface in probe results"
         )
-    id_map_root = os.path.join(path, "_id_map")
-    _, fs, id_map_hpath = fs_for(spark, id_map_root)
-    if fs.exists(id_map_hpath):
-        prior = spark.read.parquet(id_map_root).filter(
-            F.col("batch").isin(existing)
-        ).select(F.col(id_col))
-    else:
-        prior = spark.read.parquet(vec_root).filter(
-            F.col("batch").isin(existing)
-        ).select(F.col(id_col))
-    dup = (
-        newids.select(F.col(id_col).alias("_nid"))
-        .join(prior, F.col("_nid") == prior[id_col], "left_semi")
-        .limit(1)
-        .count()
-    )
-    if dup:
-        raise ValueError(
-            "append_ivf_index_many: some new vector ids already exist in "
-            "the index — duplicate rows would surface in probe results; "
-            "rebuild instead"
-        )
-    live = [i for i in range(len(new_batches)) if meta.get(i, (0,))[0]]
+    prior = [b for b in existing if b != batch_id]
+    check_overlap(spark, path, "ivf", newids, prior, id_col, verb)
 
-    def _write_id_map(i: int) -> None:
-        assigned.filter(F.col("_ab") == i).select(id_col, "cluster").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(id_map_root, f"batch={batch_ids[i]}"))
-
-    def _write_vectors(i: int) -> None:
-        assigned.filter(F.col("_ab") == i).drop("_ab").write.mode(
-            "overwrite"
-        ).partitionBy("cluster").parquet(
-            os.path.join(vec_root, f"batch={batch_ids[i]}")
+    def _write(i: int) -> None:
+        write_segment(
+            path, "ivf", batch_ids[i], assigned.filter(F.col("_ab") == i).drop("_ab"),
+            id_col,
         )
 
-    for phase in (_write_id_map, _write_vectors):
-        if not live:
-            break
-        with ThreadPoolExecutor(max_workers=min(3, len(live))) as pool:
-            futures = [pool.submit(phase, i) for i in live]
-            for fut in futures:  # await every write before the barrier
-                fut.result()
-    return [
-        {"batch_id": batch_ids[i], "n_vectors": meta.get(i, (0,))[0]}
-        for i in range(len(new_batches))
-    ]
+    run_pooled([i for i, n in enumerate(counts) if n], _write)
+    return [{"batch_id": b, "n_vectors": n} for b, n in zip(batch_ids, counts)]
 
 
 def ivf_topk_indexed(
@@ -1460,11 +1024,7 @@ def ivf_topk_indexed(
     import math
     import os
 
-    params = (
-        spark.read.schema("n_clusters int, dims int")
-        .parquet(os.path.join(path, "_ivf_params"))
-        .head()
-    )
+    params = read_sidecar(spark, path, "_ivf_params").head()
     if len(query_vec) != params.dims:
         raise ValueError(
             f"ivf_topk_indexed: query has {len(query_vec)} dims, "
@@ -1472,9 +1032,7 @@ def ivf_topk_indexed(
         )
     cents = [
         (int(r["cluster"]), [float(x) for x in r["centroid"]])
-        for r in spark.read.schema("cluster int, centroid array<double>")
-        .parquet(os.path.join(path, "_ivf_centroids"))
-        .collect()
+        for r in read_sidecar(spark, path, "_ivf_centroids").collect()
     ]
     qn = math.sqrt(sum(float(x) * float(x) for x in query_vec))
 
@@ -1537,11 +1095,7 @@ def ivf_topk_indexed_filtered(
     import os
 
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    params = (
-        spark.read.schema("n_clusters int, dims int")
-        .parquet(os.path.join(path, "_ivf_params"))
-        .head()
-    )
+    params = read_sidecar(spark, path, "_ivf_params").head()
     if len(query_vec) != params.dims:
         raise ValueError(
             f"ivf_topk_indexed_filtered: query has {len(query_vec)} dims, "
@@ -1549,9 +1103,7 @@ def ivf_topk_indexed_filtered(
         )
     cents = [
         (int(r["cluster"]), [float(x) for x in r["centroid"]])
-        for r in spark.read.schema("cluster int, centroid array<double>")
-        .parquet(os.path.join(path, "_ivf_centroids"))
-        .collect()
+        for r in read_sidecar(spark, path, "_ivf_centroids").collect()
     ]
     qn = math.sqrt(sum(float(x) * float(x) for x in query_vec))
 
@@ -2216,13 +1768,7 @@ def write_ivfpq_index(
     Rebuilding over an EXISTING index goes through the crash-safe
     staging swap (r15 advisory, the ``write_pq_index`` discipline): the
     old index stays live until the new one fully lands."""
-    import os
-
-    from ..fsutil import fs_for, heal_swap_crash, swap_with_staging
-
     spark = df.sparkSession
-    heal_swap_crash(spark, path)
-    _, fs, hpath = fs_for(spark, path)
     codes, cent_rows, codebooks = ivfpq_build(
         df,
         n_clusters=n_clusters,
@@ -2238,35 +1784,17 @@ def write_ivfpq_index(
         materialize=False,
     )
     dims = len(cent_rows[0][1])
-
-    def _build(root: str) -> None:
-        codes.write.partitionBy("cluster").parquet(
-            os.path.join(root, "codes", "batch=0")
-        )
-        (
-            local_rows_df(spark, cent_rows, "cluster int, centroid array<double>")
-            .coalesce(1)
-            .write.parquet(os.path.join(root, "_ivfpq_centroids"))
-        )
-        (
-            local_rows_df(spark, codebooks, "s int, c int, cv array<double>")
-            .coalesce(1)
-            .write.parquet(os.path.join(root, "_pq_codebooks"))
-        )
-        (
-            local_rows_df(
-                spark,
-                [(int(n_clusters), int(m), int(codes_k), int(dims), int(assign_n))],
-                "n_clusters int, m int, k int, dims int, assign_n int",
-            )
-            .coalesce(1)
-            .write.parquet(os.path.join(root, "_ivfpq_params"))
-        )
-
-    if fs.exists(hpath):
-        swap_with_staging(spark, path, _build, job="compact")
-    else:
-        _build(path)
+    params = (
+        ("_ivfpq_centroids", sidecar_df(spark, "_ivfpq_centroids", cent_rows)),
+        ("_pq_codebooks", sidecar_df(spark, "_pq_codebooks", codebooks)),
+        ("_ivfpq_params", sidecar_df(spark, "_ivfpq_params", [
+            (int(n_clusters), int(m), int(codes_k), int(dims), int(assign_n))
+        ])),
+    )
+    rebuild(
+        spark, path,
+        lambda target: write_segment(target, "ivfpq", 0, codes, id_col, params=params),
+    )
 
 
 def ivfpq_topk_indexed(
@@ -2291,11 +1819,7 @@ def ivfpq_topk_indexed(
     query of the wrong dimensionality is rejected up front."""
     import os
 
-    params = (
-        spark.read.schema("n_clusters int, m int, k int, dims int, assign_n int")
-        .parquet(os.path.join(path, "_ivfpq_params"))
-        .head()
-    )
+    params = read_sidecar(spark, path, "_ivfpq_params").head()
     if len(query_vec) != params.dims:
         raise ValueError(
             f"ivfpq_topk_indexed: query has {len(query_vec)} dims, "
@@ -2303,9 +1827,7 @@ def ivfpq_topk_indexed(
         )
     cent_rows = sorted(
         (int(r["cluster"]), [float(x) for x in r["centroid"]])
-        for r in spark.read.schema("cluster int, centroid array<double>")
-        .parquet(os.path.join(path, "_ivfpq_centroids"))
-        .collect()
+        for r in read_sidecar(spark, path, "_ivfpq_centroids").collect()
     )
     books = read_pq_codebooks(spark, path)
     codes = spark.read.parquet(os.path.join(path, "codes"))
@@ -2354,11 +1876,7 @@ def ivfpq_topk_indexed_filtered(
     import os
 
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    params = (
-        spark.read.schema("n_clusters int, m int, k int, dims int, assign_n int")
-        .parquet(os.path.join(path, "_ivfpq_params"))
-        .head()
-    )
+    params = read_sidecar(spark, path, "_ivfpq_params").head()
     if len(query_vec) != params.dims:
         raise ValueError(
             f"ivfpq_topk_indexed_filtered: query has {len(query_vec)} dims, "
@@ -2366,9 +1884,7 @@ def ivfpq_topk_indexed_filtered(
         )
     cent_rows = sorted(
         (int(r["cluster"]), [float(x) for x in r["centroid"]])
-        for r in spark.read.schema("cluster int, centroid array<double>")
-        .parquet(os.path.join(path, "_ivfpq_centroids"))
-        .collect()
+        for r in read_sidecar(spark, path, "_ivfpq_centroids").collect()
     )
     books = read_pq_codebooks(spark, path)
     matching = df.filter(pred)
@@ -2420,55 +1936,16 @@ def append_ivfpq_index(
     not exist in other segments — checked against the codes table's id
     column, which IS the family's thin membership table (id + m small
     ints per row; 8–16× under the vectors); raises on overlap."""
-    import os
-
-    from ..fsutil import existing_batch_ids
     from .kmeans import _sq_dist
 
     spark = new_vecs.sparkSession
-    codes_root = os.path.join(path, "codes")
-    existing = existing_batch_ids(spark, codes_root)
-    if not existing:
-        raise ValueError(
-            f"append_ivfpq_index: no index at {path} — build one with "
-            "write_ivfpq_index first"
-        )
-    if batch_id is None:
-        batch_id = existing[-1] + 1
-    if new_vecs.isEmpty():
-        # the empty-segment rule: write nothing, report nothing added
-        return {"batch_id": batch_id, "n_vectors": 0}
-    params = (
-        spark.read.schema("n_clusters int, m int, k int, dims int, assign_n int")
-        .parquet(os.path.join(path, "_ivfpq_params"))
-        .head()
+    batch_id, params = begin_append(
+        new_vecs, path, "ivfpq", id_col, vec_col, batch_id, "append_ivfpq_index"
     )
-    dims = len(new_vecs.select(vec_col).first()[0])
-    if dims != params.dims:
-        raise ValueError(
-            f"append_ivfpq_index: vectors have {dims} dims, index expects "
-            f"{params.dims}"
-        )
-    other = [b for b in existing if b != batch_id]
-    if other:
-        prior = spark.read.parquet(codes_root).filter(
-            F.col("batch").isin(other)
-        ).select(F.col(id_col))
-        dup = (
-            new_vecs.select(F.col(id_col))
-            .join(prior, new_vecs[id_col] == prior[id_col], "left_semi")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "append_ivfpq_index: some new vector ids already exist in "
-                "the index — duplicate rows would surface in probe results; "
-                "rebuild instead"
-            )
+    if params is None:
+        return {"batch_id": batch_id, "n_vectors": 0}
     cent_df = (
-        spark.read.schema("cluster int, centroid array<double>")
-        .parquet(os.path.join(path, "_ivfpq_centroids"))
+        read_sidecar(spark, path, "_ivfpq_centroids")
         .withColumnRenamed("centroid", "_cent")
     )
     books = read_pq_codebooks(spark, path)
@@ -2508,51 +1985,15 @@ def append_ivfpq_index(
         .join(entry.select("_ek", id_col, "cluster"), "_ek")
         .drop("_ek")
     )
-    codes.write.mode("overwrite").partitionBy("cluster").parquet(
-        os.path.join(codes_root, f"batch={batch_id}")
-    )
+    write_segment(path, "ivfpq", batch_id, codes, id_col)
     return {"batch_id": batch_id, "n_vectors": new_vecs.count()}
 
 
 def compact_ivfpq_index(spark, path: str) -> None:
-    """Collapse a segmented IVFPQ codes table to ONE segment — the
-    ``compact_ivf_index`` twin for the residual-code layout.  Sidecars
-    (centroids/codebooks/params) are copied unchanged: compaction
-    moves code rows, never retrains.  One crash-safe root swap;
-    terminal-runs-only like every swap-based job."""
-    import os
-
-    from ..fsutil import swap_with_staging
-
-    def _write(staging: str) -> None:
-        (
-            spark.read.parquet(os.path.join(path, "codes"))
-            .drop("batch")
-            .write.partitionBy("cluster")
-            .parquet(os.path.join(staging, "codes", "batch=0"))
-        )
-        (
-            spark.read.schema("cluster int, centroid array<double>")
-            .parquet(os.path.join(path, "_ivfpq_centroids"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_ivfpq_centroids"))
-        )
-        (
-            spark.read.schema("s int, c int, cv array<double>")
-            .parquet(os.path.join(path, "_pq_codebooks"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_pq_codebooks"))
-        )
-        (
-            spark.read.schema(
-                "n_clusters int, m int, k int, dims int, assign_n int"
-            )
-            .parquet(os.path.join(path, "_ivfpq_params"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_ivfpq_params"))
-        )
-
-    swap_with_staging(spark, path, _write, job="compact")
+    """Collapse a segmented IVFPQ codes table to ONE segment via
+    ``maintenance.compact``; centroids, codebooks and params are copied
+    unchanged — compaction moves code rows, never retrains."""
+    compact(spark, path, "ivfpq")
 
 
 def write_pq_index(
@@ -2591,13 +2032,7 @@ def write_pq_index(
     staging swap (r15 advisory): the old index stays live and probe-able
     until the new build fully lands — the pre-r15 delete-then-train
     order left no index at all if the long training/build failed."""
-    import os
-
-    from ..fsutil import fs_for, heal_swap_crash, swap_with_staging
-
     spark = df.sparkSession
-    heal_swap_crash(spark, path)
-    _, fs, hpath = fs_for(spark, path)
     if codebooks is None:
         codebooks = train_pq_codebooks(df, m, k, iterations, id_col, vec_col)
     m = max(s for s, _, _ in codebooks) + 1
@@ -2618,40 +2053,23 @@ def write_pq_index(
             f"centroid must be {sub_d}-dim"
         )
     dims = m * sub_d
-
-    def _build(root: str) -> None:
-        pq_encode(df, codebooks, id_col, vec_col).write.parquet(
-            os.path.join(root, "codes", "batch=0")
-        )
-        (
-            local_rows_df(spark, codebooks, "s int, c int, cv array<double>")
-            .coalesce(1)
-            .write.parquet(os.path.join(root, "_pq_codebooks"))
-        )
-        (
-            local_rows_df(
-                spark, [(int(m), int(k), int(dims))], "m int, k int, dims int"
-            )
-            .coalesce(1)
-            .write.parquet(os.path.join(root, "_pq_params"))
-        )
-
-    if fs.exists(hpath):
-        swap_with_staging(spark, path, _build, job="compact")
-    else:
-        _build(path)
+    params = (
+        ("_pq_codebooks", sidecar_df(spark, "_pq_codebooks", codebooks)),
+        ("_pq_params", sidecar_df(spark, "_pq_params", [(int(m), int(k), int(dims))])),
+    )
+    rebuild(
+        spark, path,
+        lambda target: write_segment(
+            target, "pq", 0, pq_encode(df, codebooks, id_col, vec_col), id_col,
+            params=params,
+        ),
+    )
 
 
 def read_pq_codebooks(spark, path: str) -> "list[tuple[int, int, list[float]]]":
     """The index's codebooks, driver-side (m·k·dims floats — a few KB),
     in canonical (subspace, code) order."""
-    import os
-
-    rows = (
-        spark.read.schema("s int, c int, cv array<double>")
-        .parquet(os.path.join(path, "_pq_codebooks"))
-        .collect()
-    )
+    rows = read_sidecar(spark, path, "_pq_codebooks").collect()
     return sorted((r["s"], r["c"], [float(x) for x in r["cv"]]) for r in rows)
 
 
@@ -2676,11 +2094,7 @@ def pq_topk_indexed(
     codebooks (same ADC table, same (l2_dist, id) ordering)."""
     import os
 
-    params = (
-        spark.read.schema("m int, k int, dims int")
-        .parquet(os.path.join(path, "_pq_params"))
-        .head()
-    )
+    params = read_sidecar(spark, path, "_pq_params").head()
     if len(query_vec) != params.dims:
         raise ValueError(
             f"pq_topk_indexed: query has {len(query_vec)} dims, index expects {params.dims}"
@@ -2715,11 +2129,7 @@ def pq_topk_indexed_filtered(
     serving shortlist, oversample by ~1/selectivity."""
     import os
 
-    params = (
-        spark.read.schema("m int, k int, dims int")
-        .parquet(os.path.join(path, "_pq_params"))
-        .head()
-    )
+    params = read_sidecar(spark, path, "_pq_params").head()
     if len(query_vec) != params.dims:
         raise ValueError(
             f"pq_topk_indexed_filtered: query has {len(query_vec)} dims, "
@@ -2766,86 +2176,22 @@ def append_pq_index(
     checked against the codes table's id column (the codes table IS
     the thin membership table: id + m small ints); raises on overlap.
     """
-    import os
-
-    from ..fsutil import existing_batch_ids
-
     spark = new_vecs.sparkSession
-    codes_root = os.path.join(path, "codes")
-    existing = existing_batch_ids(spark, codes_root)
-    if not existing:
-        raise ValueError(
-            f"append_pq_index: no index at {path} — build one with "
-            "write_pq_index first"
-        )
-    if batch_id is None:
-        batch_id = existing[-1] + 1
-    if new_vecs.isEmpty():
+    batch_id, params = begin_append(
+        new_vecs, path, "pq", id_col, vec_col, batch_id, "append_pq_index"
+    )
+    if params is None:
         return {"batch_id": batch_id, "n_vectors": 0}
-    params = (
-        spark.read.schema("m int, k int, dims int")
-        .parquet(os.path.join(path, "_pq_params"))
-        .head()
-    )
-    dims = len(new_vecs.select(vec_col).first()[0])
-    if dims != params.dims:
-        raise ValueError(
-            f"append_pq_index: vectors have {dims} dims, index expects "
-            f"{params.dims}"
-        )
-    other = [b for b in existing if b != batch_id]
-    if other:
-        prior = spark.read.parquet(codes_root).filter(
-            F.col("batch").isin(other)
-        ).select(F.col(id_col))
-        dup = (
-            new_vecs.select(F.col(id_col))
-            .join(prior, new_vecs[id_col] == prior[id_col], "left_semi")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "append_pq_index: some new vector ids already exist in the "
-                "index — duplicate rows would surface in probe results; "
-                "rebuild instead"
-            )
-    books = read_pq_codebooks(spark, path)
-    pq_encode(new_vecs, books, id_col, vec_col).write.mode("overwrite").parquet(
-        os.path.join(codes_root, f"batch={batch_id}")
-    )
+    codes = pq_encode(new_vecs, read_pq_codebooks(spark, path), id_col, vec_col)
+    write_segment(path, "pq", batch_id, codes, id_col)
     return {"batch_id": batch_id, "n_vectors": new_vecs.count()}
 
 
 def compact_pq_index(spark, path: str) -> None:
-    """Collapse a segmented PQ codes table to ONE segment — bounds the
-    probe's listing cost after many appends.  Pure row movement (codes
-    are disjoint); sidecars copied unchanged.  One crash-safe root
-    swap; terminal-runs-only."""
-    import os
-
-    from ..fsutil import swap_with_staging
-
-    def _write(staging: str) -> None:
-        (
-            spark.read.parquet(os.path.join(path, "codes"))
-            .drop("batch")
-            .write.parquet(os.path.join(staging, "codes", "batch=0"))
-        )
-        (
-            spark.read.schema("s int, c int, cv array<double>")
-            .parquet(os.path.join(path, "_pq_codebooks"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_pq_codebooks"))
-        )
-        (
-            spark.read.schema("m int, k int, dims int")
-            .parquet(os.path.join(path, "_pq_params"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_pq_params"))
-        )
-
-    swap_with_staging(spark, path, _write, job="compact")
+    """Collapse a segmented PQ codes table to ONE segment via
+    ``maintenance.compact`` — pure row movement (codes are disjoint);
+    codebooks and params copied unchanged."""
+    compact(spark, path, "pq")
 
 
 def anchor_pq_codebooks(

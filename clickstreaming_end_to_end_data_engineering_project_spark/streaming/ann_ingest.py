@@ -26,22 +26,84 @@ indexes):
   given the codebooks); IVFPQ additionally inherits the IVF recall
   caveat under distribution drift.
 
-All sinks inherit replay idempotence from the explicit ``batch_id``
+All of them (and streaming/bm25_ingest.Bm25IngestSink) are one
+``SegmentIngestSink`` over the operators/maintenance layout table,
+and inherit replay idempotence from the explicit ``batch_id``
 overwrite semantics of ``append_*_index``: a re-delivered micro-batch
 rewrites its own segment's directories, so crashed or replayed
 batches can never double-insert a vector.  Compaction must NOT run
-from inside a live stream's cadence — see
-operators/maintenance.maintain_index for the replay-wedge analysis.
+from inside a live stream's cadence — see the operators/maintenance
+module docstring for the replay-wedge analysis.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 
+from ..operators import similarity as S
 
-class LshIngestSink:
-    """foreachBatch callable: micro-batch of (id, vector) rows → one
-    LSH index segment (bootstraps the layout on the first batch)."""
+
+class SegmentIngestSink:
+    """foreachBatch callable: each non-empty micro-batch becomes one
+    ``batch=<micro-batch id>`` segment of the written index at
+    ``index_dir`` through the layout's ``append`` verb, under the
+    explicit id (replay-idempotent).  A layout that needs no training
+    (``Layout.bootstrap``) is built by the ``bootstrap`` writer from the
+    first micro-batch — also when the only segment is this batch's own
+    and the params sidecar is missing, the replay of a first batch that
+    crashed before its params landed.  ``geometry`` is the bootstrap
+    writer's build parameters; later segments read them back from the
+    params sidecar, so they can never drift."""
+
+    kind = ""
+    append = None
+    bootstrap = None
+
+    def __init__(
+        self,
+        index_dir: str,
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+        **geometry,
+    ) -> None:
+        self.index_dir = index_dir
+        self.id_col = id_col
+        self.vec_col = vec_col
+        self.geometry = geometry
+
+    def __call__(self, batch: DataFrame, batch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        import os
+
+        from ..fsutil import existing_batch_ids, fs_for
+        from ..operators.maintenance import LAYOUTS, segment_root
+
+        spark = batch.sparkSession
+        lay = LAYOUTS[self.kind]
+        if lay.bootstrap:
+            existing = existing_batch_ids(spark, segment_root(self.index_dir, lay))
+            _, fs, params = fs_for(spark, os.path.join(self.index_dir, lay.params))
+            if not existing or (existing == [batch_id] and not fs.exists(params)):
+                type(self).bootstrap(
+                    batch, self.index_dir, batch_id, self.id_col, self.vec_col,
+                    **self.geometry,
+                )
+                return
+        type(self).append(batch, self.index_dir, self.id_col, self.vec_col, batch_id)
+
+
+class LshIngestSink(SegmentIngestSink):
+    """Micro-batches of (id, vector) rows → LSH index segments;
+    bootstraps the layout from the first batch (hyperplanes are
+    content-deterministic, so the streamed index is bit-identical to a
+    batch build over the same vectors)."""
+
+    kind = "lsh"
+    append = S.append_lsh_index
+    bootstrap = partial(S._write_lsh_segment, write_params=True)
 
     def __init__(
         self,
@@ -51,131 +113,29 @@ class LshIngestSink:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> None:
-        self.index_dir = index_dir
-        self.planes = planes
-        self.dims = dims
-        self.id_col = id_col
-        self.vec_col = vec_col
-
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from ..fsutil import existing_batch_ids
-        from ..operators.similarity import _write_lsh_segment, append_lsh_index
-
-        if not existing_batch_ids(batch.sparkSession, self.index_dir):
-            # bootstrap: geometry from the sink (laid down as the
-            # _lsh_params sidecar; later segments read it back so it
-            # can never drift).  The first segment is written under
-            # THIS batch's id so a replay of it overwrites the same
-            # directories.
-            _write_lsh_segment(
-                batch,
-                self.index_dir,
-                batch_id,
-                self.planes,
-                self.dims,
-                self.id_col,
-                self.vec_col,
-                write_params=True,
-            )
-            return
-        append_lsh_index(
-            batch,
-            self.index_dir,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            batch_id=batch_id,
-        )
+        super().__init__(index_dir, id_col, vec_col, planes=planes, dims=dims)
 
 
-class IvfIngestSink:
-    """foreachBatch callable: micro-batch of (id, vector) rows → one
-    segment of a PRE-TRAINED IVF layout (raises if the index does not
-    exist — train first with ``write_ivf_index``)."""
+class IvfIngestSink(SegmentIngestSink):
+    """Micro-batches → segments of a PRE-TRAINED IVF layout (raises if
+    the index does not exist — train first with ``write_ivf_index``)."""
 
-    def __init__(
-        self,
-        index_dir: str,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> None:
-        self.index_dir = index_dir
-        self.id_col = id_col
-        self.vec_col = vec_col
-
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from ..operators.similarity import append_ivf_index
-
-        append_ivf_index(
-            batch,
-            self.index_dir,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            batch_id=batch_id,
-        )
+    kind = "ivf"
+    append = S.append_ivf_index
 
 
-class PqIngestSink:
-    """foreachBatch callable: micro-batch of (id, vector) rows → one
-    ``codes/batch=<id>`` segment of a PRE-TRAINED PQ layout (raises if
-    the index does not exist — train first with ``write_pq_index``).
-    Encoding against stored codebooks is deterministic, so the
-    streamed index equals a same-codebook batch build bit-for-bit."""
+class PqIngestSink(SegmentIngestSink):
+    """Micro-batches → ``codes/batch=<id>`` segments of a PRE-TRAINED
+    PQ layout, encoded against the stored codebooks."""
 
-    def __init__(
-        self,
-        index_dir: str,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> None:
-        self.index_dir = index_dir
-        self.id_col = id_col
-        self.vec_col = vec_col
-
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from ..operators.similarity import append_pq_index
-
-        append_pq_index(
-            batch,
-            self.index_dir,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            batch_id=batch_id,
-        )
+    kind = "pq"
+    append = S.append_pq_index
 
 
-class IvfpqIngestSink:
-    """foreachBatch callable: micro-batch of (id, vector) rows → one
-    ``codes/batch=<id>/cluster=<c>/`` segment of a PRE-TRAINED IVFPQ
-    layout (raises if the index does not exist — train first with
-    ``write_ivfpq_index``).  Assignment to stored coarse centroids +
-    residual encoding against stored codebooks — the streaming face of
-    ``append_ivfpq_index``'s add-after-train contract."""
+class IvfpqIngestSink(SegmentIngestSink):
+    """Micro-batches → ``codes/batch=<id>/cluster=<c>/`` segments of a
+    PRE-TRAINED IVFPQ layout (assignment to the stored coarse
+    centroids + residual encoding against the stored codebooks)."""
 
-    def __init__(
-        self,
-        index_dir: str,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> None:
-        self.index_dir = index_dir
-        self.id_col = id_col
-        self.vec_col = vec_col
-
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from ..operators.similarity import append_ivfpq_index
-
-        append_ivfpq_index(
-            batch,
-            self.index_dir,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            batch_id=batch_id,
-        )
+    kind = "ivfpq"
+    append = S.append_ivfpq_index

@@ -40,6 +40,19 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+def pytest_terminal_summary(terminalreporter):
+    """Say how many @slow batteries the fast profile skipped, so the
+    dropped coverage is visible in every run's summary."""
+    n = sum(
+        "slow" in r.keywords for r in terminalreporter.stats.get("skipped", [])
+    )
+    if n:
+        terminalreporter.write_line(
+            f"fast profile: {n} @slow tests skipped "
+            "(run them with SPARK_GRAFT_FULL_SUITE=1)"
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("engine-tests", cpus=os.environ.get("SPARK_GRAFT_TEST_CPUS", "8"))

@@ -5232,6 +5232,55 @@ def test_lsh_append_crash_before_vectors_write_retries_clean(spark, tmp_path):
     assert S.append_lsh_index(part_b, idx2)["n_vectors"] == 8
 
 
+def test_bm25_compaction_recomputes_stats_from_postings(spark, tmp_path):
+    """A BM25 append that crashed after its ``_bm25_params`` and
+    ``_doclens`` slices landed (the write order puts them before the
+    postings), then a compaction: the compacted index must describe
+    exactly the docs its postings hold.  Compaction rebuilds
+    ``_doclens``, ``_termstats`` and ``_bm25_params`` from the
+    postings, so the probe equals a rebuild over those 16 docs and the
+    lost docs re-append cleanly (copying the orphaned slices reported
+    n_docs=24 and wedged every re-append on "already exist")."""
+    import os
+    import shutil
+
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
+        retrieval as R,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"spark stream doc{i % 4} tok{i % 7}") for i in range(24)],
+        "doc_id long, text string",
+    )
+    part_a = docs.filter(F.col("doc_id") < 16)
+    part_b = docs.filter(F.col("doc_id") >= 16)
+    idx = str(tmp_path / "bm25_compact_orphan")
+    R.write_bm25_index(part_a, idx, n_buckets=4)
+    R.append_bm25_index(part_b, idx)
+    # crash window: params + doclens slices landed, postings and
+    # termstats did not
+    shutil.rmtree(os.path.join(idx, "batch=1"))
+    shutil.rmtree(os.path.join(idx, "_termstats", "batch=1"))
+    R.compact_bm25_index(spark, idx)
+
+    terms = ["spark", "doc1", "tok2"]
+
+    def probe(path):
+        return [tuple(r) for r in R.bm25_topk_indexed(spark, path, terms, k=24).collect()]
+
+    rebuilt = str(tmp_path / "bm25_compact_rebuild")
+    R.write_bm25_index(part_a, rebuilt, n_buckets=4)
+    assert probe(idx) == probe(rebuilt)
+    params = spark.read.parquet(os.path.join(idx, "_bm25_params")).collect()
+    assert [r["n_docs"] for r in params] == [16]
+    assert spark.read.parquet(os.path.join(idx, "_doclens")).count() == 16
+
+    assert R.append_bm25_index(part_b, idx) == {"batch_id": 1, "n_docs": 8}
+    full = str(tmp_path / "bm25_compact_full")
+    R.write_bm25_index(docs, full, n_buckets=4)
+    assert probe(idx) == probe(full) and len(probe(full)) == 24
+
+
 def test_bm25_append_crash_before_postings_write_retries_clean(spark, tmp_path):
     """r15 symmetry audit, the BM25 member: _write_bm25_segment lays
     _doclens (the overlap-validation slice) down BEFORE the postings
@@ -8538,6 +8587,148 @@ def test_forget_ids_pooled_deletes_keep_swap_discipline(spark, sf_dir, tmp_path)
         if col in store.columns:
             got = {r[0] for r in store.select(col).distinct().collect()}
             assert not (got & vic), f"{root} still serves victim ids"
+
+
+def test_forget_ids_rejects_nested_index_roots(spark, tmp_path):
+    """forget_ids runs its index deletes in a thread pool, and two
+    roots where one lies inside the other would race their staged-swap
+    renames.  Such roots (either order, and the same root spelled with
+    a trailing slash) are rejected before ANY delete runs: every index
+    and dataset is left byte-for-byte untouched."""
+    import os
+
+    import pytest
+
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
+        retrieval as R,
+        similarity as S,
+    )
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators.maintenance import (
+        forget_ids,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"spark doc{i % 3} stream") for i in range(12)], "doc_id long, text string"
+    )
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 4), 1.0, float(i % 3), 0.5]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    outer = str(tmp_path / "bm25")
+    inner = os.path.join(outer, "_nested_lsh")
+    corpus = str(tmp_path / "corpus.parquet")
+    R.write_bm25_index(docs, outer, n_buckets=4)
+    S.write_lsh_index(vecs, inner, planes=2, dims=4)
+    docs.write.parquet(corpus)
+
+    def snapshot():
+        return sorted(
+            (os.path.join(base, f), os.stat(os.path.join(base, f)).st_mtime_ns)
+            for base, _, files in os.walk(tmp_path)
+            for f in files
+        )
+
+    before = snapshot()
+    for roots in ([outer, inner], [inner, outer]):
+        with pytest.raises(ValueError, match="nested index roots"):
+            forget_ids(spark, [1, 2], index_roots=roots, datasets=[(corpus, "doc_id")])
+    with pytest.raises(ValueError, match="listed twice"):
+        forget_ids(spark, [1, 2], index_roots=[outer, outer + "/"])
+    assert snapshot() == before, "rejected roots must leave every store untouched"
+    # sibling roots sharing a name prefix are not nested
+    sibling = outer + "_b"
+    R.write_bm25_index(docs, sibling, n_buckets=4)
+    report = forget_ids(spark, [1], index_roots=[outer, sibling])
+    assert report[("index", sibling)]["docs_deleted"] == 1
+
+
+def test_index_verbs_spark_job_counts_do_not_grow(spark, tmp_path):
+    """Pins the Spark job count of append, delete and compact on each
+    written layout (a 300-row build, a 100-row append, a delete that
+    touches both segments, then a compaction) to at most what the
+    per-layout implementations ran before the layouts shared one
+    segmented-index core.  Jobs are load-independent, so a rise is a
+    real regression: an extra listing, schema inference or action.
+    Counts depend on partitioning, so the bounds are keyed by the
+    session's default parallelism (measured at local[4] and local[8])."""
+    import os
+
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
+        retrieval as R,
+        similarity as S,
+    )
+
+    before = {  # verb -> layout -> jobs, at local[8]; local[4] below
+        8: {
+            "append": {"bm25": 19, "lsh": 10, "ivf": 14, "pq": 15, "ivfpq": 20},
+            "delete": {"bm25": 31, "lsh": 16, "ivf": 16, "pq": 12, "ivfpq": 12},
+            "compact": {"bm25": 8, "lsh": 6, "ivf": 7, "pq": 4, "ivfpq": 5},
+        },
+        4: {
+            "append": {"bm25": 19, "lsh": 10, "ivf": 13, "pq": 14, "ivfpq": 19},
+            "delete": {"bm25": 31, "lsh": 16, "ivf": 16, "pq": 12, "ivfpq": 12},
+            "compact": {"bm25": 8, "lsh": 6, "ivf": 7, "pq": 4, "ivfpq": 5},
+        },
+    }
+    sc = spark.sparkContext
+    bounds = before.get(sc.defaultParallelism, before[8])
+
+    def jobs(fn) -> int:
+        group = f"jobpin-{os.urandom(4).hex()}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    n = 400
+    docs = spark.createDataFrame(
+        [(i, f"spark stream doc{i % 9} hash tok{i % 13} w{i % 5}") for i in range(n)],
+        "doc_id long, text string",
+    ).localCheckpoint(eager=True)
+    vecs = spark.createDataFrame(
+        [(i, [float((i * 7) % 11), float(i % 5), float((i * 3) % 7), 1.0,
+              float(i % 4), float((i * 5) % 9), 0.5, float(i % 6)]) for i in range(n)],
+        "vec_id long, embedding array<double>",
+    ).localCheckpoint(eager=True)
+    books = S.anchor_pq_codebooks(vecs, m=2, k=8)
+    base_d, inc_d = docs.filter(F.col("doc_id") < 300), docs.filter(F.col("doc_id") >= 300)
+    base_v, inc_v = vecs.filter(F.col("vec_id") < 300), vecs.filter(F.col("vec_id") >= 300)
+    victims = [3, 310]  # one id in each segment
+    layouts = {
+        "bm25": (lambda p: R.write_bm25_index(base_d, p, n_buckets=4),
+                 lambda p: R.append_bm25_index(inc_d, p),
+                 R.delete_from_bm25_index, R.compact_bm25_index),
+        "lsh": (lambda p: S.write_lsh_index(base_v, p, planes=2, dims=8),
+                lambda p: S.append_lsh_index(inc_v, p),
+                S.delete_from_lsh_index, S.compact_lsh_index),
+        "ivf": (lambda p: S.write_ivf_index(base_v, p, n_clusters=3, iterations=1),
+                lambda p: S.append_ivf_index(inc_v, p),
+                S.delete_from_ivf_index, S.compact_ivf_index),
+        "pq": (lambda p: S.write_pq_index(base_v, p, codebooks=books),
+               lambda p: S.append_pq_index(inc_v, p),
+               S.delete_from_pq_index, S.compact_pq_index),
+        "ivfpq": (lambda p: S.write_ivfpq_index(base_v, p, n_clusters=3, m=2, codes_k=8,
+                                                coarse_iterations=1, pq_iterations=1),
+                  lambda p: S.append_ivfpq_index(inc_v, p),
+                  S.delete_from_ivfpq_index, S.compact_ivfpq_index),
+    }
+    got = {"append": {}, "delete": {}, "compact": {}}
+    for name, (build, append, delete, compact) in layouts.items():
+        p = str(tmp_path / name)
+        build(p)
+        got["append"][name] = jobs(lambda: append(p))
+        got["delete"][name] = jobs(lambda: delete(spark, p, victims))
+        got["compact"][name] = jobs(lambda: compact(spark, p))
+    over = {
+        (verb, name): (n_jobs, bounds[verb][name])
+        for verb, per in got.items()
+        for name, n_jobs in per.items()
+        if n_jobs > bounds[verb][name]
+    }
+    assert not over, f"(verb, layout): (jobs, bound) over the pin: {over}"
 
 
 def test_cosine_dense_gate_bounds_collect_bytes(spark, monkeypatch):
